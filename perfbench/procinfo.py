@@ -113,9 +113,11 @@ def tree_pss_mb(root: int) -> float:
 class PeakMemory:
     """Samples the process tree's memory (:func:`tree_pss_mb`) on a
     background thread and keeps the maximum: benchmark process, Spark
-    JVM and its Python workers."""
+    JVM and its Python workers.  Once a second by default: reading the
+    JVM's ``smaps_rollup`` takes its memory-map lock, so sampling often
+    slows the run it measures."""
 
-    def __init__(self, interval_s: float = 0.1):
+    def __init__(self, interval_s: float = 1.0):
         self.peak_mb = 0.0
         self._interval = interval_s
         self._stop = threading.Event()

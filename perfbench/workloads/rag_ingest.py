@@ -31,9 +31,11 @@ SIZES = {
              "questions": 5, "q_words": 30, "k": 4},
 }
 
-#: untimed (but checked) operations before the measured window:
-#: one cycle: the set-up ran the ingest path, not the question path
-WARMUP_S = 4.0
+#: untimed (but checked) operations before the measured window, about
+#: four cycles: the set-up ran the ingest path but not the question
+#: path, and cycles keep getting faster for a while after it (JIT
+#: compilation)
+WARMUP_S = 12.0
 
 DUP_SHARE = 0.10
 THRESHOLD = 0.8
@@ -185,33 +187,39 @@ def run(ctx: Context) -> Result:
             log(f"rag_ingest: {nq - found} of {nq} questions missed their source chunk")
         return found == nq
 
-    inc_ms, q_ms, driver_s = [], [], []
+    inc_ms, q_ms, cycle_ms, driver_s = [], [], [], []
     hit = 0
     op = 0
 
-    def cycle(inc_times: list, q_times: list) -> None:
+    def cycle(inc_times: list, q_times: list, cycle_times: list) -> None:
+        """One increment and its questions; a cycle whose two timed
+        parts both completed adds their sum to ``cycle_times``."""
         nonlocal op
         op += 1
+        n_inc, n_q = len(inc_times), len(q_times)
         batch = new_batch(p["docs"], str(op))
         attempt(res, ingest_checked, coll, *batch, exp, inc_times)
         attempt(res, ask, op, q_times)
+        if len(inc_times) > n_inc and len(q_times) > n_q:
+            cycle_times.append(inc_times[-1] + q_times[-1])
 
     # warm-up (untimed, still checked): whole cycles
     warm = Deadline(WARMUP_S)
     while warm.open():
-        cycle([], [])
+        cycle([], [], [])
     hit = 0
     deadline = Deadline(ctx.seconds)
     while deadline.open():
-        cycle(inc_ms, q_ms)
+        cycle(inc_ms, q_ms, cycle_ms)
     docs = len(inc_ms) * p["docs"]
 
-    res.op_ms = inc_ms
+    res.op_ms = cycle_ms
     res.items = docs
     res.busy_s = (sum(inc_ms) + sum(q_ms)) / 1e3
     asked = len(q_ms) * p["questions"]
     res.detail = {
         **summarize(inc_ms, "increment"),
+        **summarize(q_ms, "questions"),
         "ingest_docs_per_s": docs / (sum(inc_ms) / 1e3),
         "rag_questions_per_s": asked / (sum(q_ms) / 1e3),
         "stored_bytes_per_user_byte": inputs.dir_bytes(coll) / exp.user_bytes,

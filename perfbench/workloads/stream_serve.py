@@ -29,8 +29,9 @@ SIZES = {
 
 #: untimed (but checked) operations before the measured window:
 #: the first seconds after the stream starts run slower batches
-#: (JIT compilation), which would otherwise land in the window
-WARMUP_S = 8.0
+#: (JIT compilation, still visible 10 s in), which would otherwise
+#: land in the window
+WARMUP_S = 15.0
 
 
 def _wall(ts: str) -> float:
