@@ -78,7 +78,7 @@ def test_cube_is_single_expand_pass(tables):
 
 def test_knn_join_scans_corpus_once(tables):
     """Multi-chunk batch kNN must NOT rescan the corpus per query
-    chunk: all chunks ride one broadcast into a single mapInPandas, so
+    chunk: all chunks ride one broadcast into a single mapInArrow, so
     the plan has exactly one corpus scan and one Python worker stage
     regardless of |Q|/query_chunk."""
     import re
@@ -90,9 +90,9 @@ def test_knn_join_scans_corpus_once(tables):
     )
     # query_chunk=3 → 3 chunks of the 8 queries; still one scan
     df = S.knn_join(q, tables["embeddings"], k=3, query_chunk=3)
-    plan = assert_plan_contains(df, "MapInPandas")
+    plan = assert_plan_contains(df, "MapInArrow")
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
-    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, re.M)) == 1
 
 
 def test_bm25_broadcasts_term_stats(tables):

@@ -137,6 +137,26 @@ def test_knn_join_empty_queries(corpus, spark):
     assert S.knn_join(queries, corpus, k=3, query_id="qid", query_vec="qvec").count() == 0
 
 
+def test_knn_join_string_ids_keep_types_when_empty(corpus):
+    """String-keyed inputs: the result is typed from the inputs' id
+    columns whether or not any query arrives."""
+    keyed = corpus.select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("sid"), "embedding"
+    )
+    queries = keyed.filter(F.col("sid").isin("v1", "v2")).select(
+        F.col("sid").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    want = [("qid", "string"), ("neighbor_id", "string"), ("score", "double"), ("rank", "int")]
+    hits = S.knn_join(queries, keyed, k=3, query_vec="qvec", id_col="sid")
+    empty = S.knn_join(
+        queries.filter("qid = 'none'"), keyed, k=3, query_vec="qvec", id_col="sid"
+    )
+    assert hits.dtypes == want and empty.dtypes == want
+    got = {(r.qid, r.rank): r.neighbor_id for r in hits.collect()}
+    assert len(got) == 2 * 3 and got[("v1", 1)] == "v1" and got[("v2", 1)] == "v2"
+    assert empty.count() == 0
+
+
 def test_collection_topk_shard_is_partition_pruned(corpus, spark, tmp_path):
     """Single-shard search over the durable collection opens only that
     shard's partition directory (reference per-shard endpoint)."""

@@ -9,8 +9,12 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators import search
 from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.operators.search import (
     knn_join,
 )
@@ -18,11 +22,11 @@ from vector_database_with_gpu_acceleration_for_llm_retrieval_spark.streaming imp
     serving as S,
 )
 
+pytestmark = pytest.mark.driver_gate
 
-def _result_set(df):
-    return {
-        (r.qid, r.neighbor_id, r.rank, round(r.score, 6)) for r in df.collect()
-    }
+
+def _result_set(rows):
+    return {(r.qid, r.neighbor_id, r.rank, round(r.score, 6)) for r in rows}
 
 
 def test_stream_search_matches_batch(spark, tables):
@@ -62,8 +66,8 @@ def test_stream_search_matches_batch(spark, tables):
         q.stop()
 
         assert len(batch_ids) >= 2  # really served incrementally
-        got = _result_set(spark.read.parquet(sink))
-        expect = _result_set(knn_join(queries, corpus, k=5))
+        got = _result_set(spark.read.parquet(sink).collect())
+        expect = _result_set(knn_join(queries, corpus, k=5).collect())
         assert got == expect
     finally:
         corpus.unpersist()
@@ -100,8 +104,10 @@ def test_stream_search_custom_search_fn(spark, tables):
         q = S.stream_search(spark, src, corpus, sink_fn, search_fn=ann)
         q.processAllAvailable()
         q.stop()
-        got = _result_set(spark.read.parquet(sink))
-        expect = _result_set(knn_join_expr(queries, corpus, k=4, query_vec="embedding"))
+        got = _result_set(spark.read.parquet(sink).collect())
+        expect = _result_set(
+            knn_join_expr(queries, corpus, k=4, query_vec="embedding").collect()
+        )
         assert got == expect
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -165,3 +171,146 @@ def test_stream_search_range_join_serving(spark, tables):
     finally:
         corpus.unpersist()
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# default path: the corpus held in the driver, answers equal knn_join's
+# ---------------------------------------------------------------------------
+
+
+def _serve(spark, src, corpus, files, **kwargs):
+    """Run stream_search over query ``files`` (DataFrames appended to
+    ``src`` one file each, served one file per micro-batch); returns
+    the handed-over rows and each handed-over frame's dtypes."""
+    for f in files:
+        f.coalesce(1).write.mode("append").parquet(src)
+    rows, dtypes = [], []
+
+    def on_batch(hits, batch_id):
+        dtypes.append(hits.dtypes)
+        rows.extend(hits.collect())
+
+    q = S.stream_search(
+        spark, src, corpus, on_batch, reader_options={"maxFilesPerTrigger": 1}, **kwargs
+    )
+    q.processAllAvailable()
+    q.stop()
+    return rows, dtypes
+
+
+def _never_held(*args, **kwargs):
+    raise AssertionError("the corpus must not be pulled to the driver")
+
+
+@pytest.mark.parametrize("metric", ["cosine", "l2"])
+def test_held_corpus_matches_knn_join(spark, tables, tmp_path, metric):
+    corpus = tables["embeddings"].select("vec_id", "embedding")
+    queries = corpus.filter(F.col("vec_id") % 50 == 7).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    files = [queries.filter(F.col("qid") < 200), queries.filter(F.col("qid") >= 200)]
+    rows, dtypes = _serve(spark, str(tmp_path / "src"), corpus, files, k=6, metric=metric)
+    want = knn_join(queries, corpus, k=6, metric=metric)
+    assert len(dtypes) == 2 and all(d == want.dtypes for d in dtypes)
+    assert _result_set(rows) == _result_set(want.collect())
+    assert len(rows) == queries.count() * 6
+
+
+@pytest.mark.parametrize("metric", ["cosine", "l2"])
+def test_held_corpus_ties_across_kth_place(spark, tmp_path, metric):
+    """Many corpus rows share a score at the k-th place (one-hot rows,
+    exact in float64): the lowest ids win, as in knn_join's window."""
+    dim = 4
+    corpus = spark.createDataFrame(
+        [
+            (i, [float(1 + i % 2) if j == i % 3 else 0.0 for j in range(dim)])
+            for i in range(30)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(0, [3.0, 1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0, 1.0]), (2, [1.0, 1.0, 1.0, 0.0])],
+        "qid long, embedding array<float>",
+    )
+    rows, _ = _serve(spark, str(tmp_path / "src"), corpus, [queries], k=4, metric=metric)
+    want = {(r.qid, r.neighbor_id, r.rank, r.score) for r in
+            knn_join(queries, corpus, k=4, metric=metric).collect()}
+    assert {(r.qid, r.neighbor_id, r.rank, r.score) for r in rows} == want
+    # query 1 is orthogonal to every corpus row: under cosine all 30
+    # tie, under l2 the 15 unit-norm rows (even ids) tie
+    first = [0, 1, 2, 3] if metric == "cosine" else [0, 2, 4, 6]
+    assert sorted((r.rank, r.neighbor_id) for r in rows if r.qid == 1) == list(
+        zip(range(1, 5), first)
+    )
+
+
+def test_held_corpus_string_ids(spark, tables, tmp_path):
+    corpus = tables["embeddings"].select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("sid"), "embedding"
+    )
+    queries = corpus.filter(F.col("sid").isin("v3", "v40", "v41")).select(
+        F.concat(F.lit("q"), F.col("sid")).alias("qid"), "embedding"
+    )
+    rows, dtypes = _serve(
+        spark, str(tmp_path / "src"), corpus, [queries], k=3, id_col="sid",
+        schema="qid string, embedding array<float>",
+    )
+    want = knn_join(queries, corpus, k=3, id_col="sid")
+    assert dtypes == [want.dtypes]
+    assert dtypes[0][:2] == [("qid", "string"), ("neighbor_id", "string")]
+    assert _result_set(rows) == _result_set(want.collect())
+    assert {(r.qid, r.neighbor_id) for r in rows if r.rank == 1} == {
+        ("qv3", "v3"), ("qv40", "v40"), ("qv41", "v41")
+    }
+
+
+@pytest.mark.parametrize("over_bound", [False, True])
+def test_empty_micro_batch_skips_on_batch(spark, tables, tmp_path, monkeypatch, over_bound):
+    if over_bound:
+        monkeypatch.setattr(search, "KNN_JOIN_MAX_BROADCAST_ROWS", 10)
+    corpus = tables["embeddings"].select("vec_id", "embedding")
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"qid": pa.array([], pa.int64()),
+                  "embedding": pa.array([], pa.list_(pa.float32()))}),
+        str(src / "empty.parquet"),
+    )
+    calls = []
+    q = S.stream_search(spark, str(src), corpus, lambda hits, bid: calls.append(bid))
+    try:
+        q.processAllAvailable()
+        ran = [p for p in q.recentProgress if p.numInputRows == 0 and "addBatch" in p.durationMs]
+        assert ran  # the empty file really was a micro-batch
+        assert calls == []
+    finally:
+        q.stop()
+
+
+def test_over_bound_corpus_falls_back_to_knn_join(spark, tables, tmp_path, monkeypatch):
+    monkeypatch.setattr(search, "KNN_JOIN_MAX_BROADCAST_ROWS", 100)
+    monkeypatch.setattr(S, "_HeldCorpus", _never_held)
+    corpus = tables["embeddings"].select("vec_id", "embedding")
+    queries = corpus.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    rows, dtypes = _serve(spark, str(tmp_path / "src"), corpus, [queries], k=5)
+    want = knn_join(queries, corpus, k=5)
+    assert dtypes == [want.dtypes]
+    assert _result_set(rows) == _result_set(want.collect()) and len(rows) == 4 * 5
+
+
+def test_search_fn_takes_precedence(spark, tables, tmp_path, monkeypatch):
+    """With a search_fn the corpus is never pulled to the driver and
+    on_batch sees exactly the search_fn's frame."""
+    monkeypatch.setattr(S, "_HeldCorpus", _never_held)
+    corpus = tables["embeddings"].select("vec_id", "embedding")
+    queries = corpus.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    rows, _ = _serve(
+        spark, str(tmp_path / "src"), corpus, [queries],
+        search_fn=lambda batch: knn_join(batch, corpus, k=2).withColumn("via", F.lit("fn")),
+    )
+    assert len(rows) == 3 * 2 and {r.via for r in rows} == {"fn"}
+    assert _result_set(rows) == _result_set(knn_join(queries, corpus, k=2).collect())

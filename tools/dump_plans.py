@@ -24,7 +24,7 @@ AUDITED = {
         "+ driver merge (the coordinator algorithm); no Exchange, scan prunes to 2 columns."
     ),
     "knn_join": (
-        "Batch kNN: mapInPandas scores each corpus partition against the broadcast "
+        "Batch kNN: mapInArrow scores each corpus partition against the broadcast "
         "query chunk and prunes to per-batch top-k BEFORE the shuffle; the window "
         "then ranks O(parts·|Q|·k) survivors, not O(|Q|·N) pairs."
     ),
